@@ -59,9 +59,21 @@ object ScalableWindows {
     * near 200 MB — inside the "a few hundred MB is usually fine" envelope
     * and far under Spark's 8 GB / 512 M-row hard cap — while any sanely
     * sized deployment (chunkWidth 1-10 M ids) stays under it up to
-    * ~10^13 input rows. Env-overridable for experiments. */
-  val MaxBroadcastCarryRows: Long =
-    sys.env.get("GRAFT_MAX_BROADCAST_CARRY_ROWS").map(_.toLong).getOrElse(2000000L)
+    * ~10^13 input rows. Env-overridable for experiments
+    * (`GRAFT_MAX_BROADCAST_CARRY_ROWS`), read when a window is built, so a
+    * malformed value fails that call with a directed error instead of
+    * this object's initialization. */
+  def MaxBroadcastCarryRows: Long =
+    parseMaxBroadcastCarryRows(sys.env.get("GRAFT_MAX_BROADCAST_CARRY_ROWS"))
+
+  private val DefaultMaxBroadcastCarryRows = 2000000L
+
+  private[operators] def parseMaxBroadcastCarryRows(raw: Option[String]): Long =
+    raw.fold(DefaultMaxBroadcastCarryRows) { s =>
+      s.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"GRAFT_MAX_BROADCAST_CARRY_ROWS='$s' is not a row count: set it to a " +
+          s"non-negative integer or unset it for the default $DefaultMaxBroadcastCarryRows"))
+    }
 
   /** Materialize the model-sized carry table and pick the join strategy
     * from its MEASURED size: persist + count (the aggregate runs exactly

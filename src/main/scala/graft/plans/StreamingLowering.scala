@@ -36,6 +36,23 @@ import graft.core.Event
   * O(window) lowerings. For column-typed pipelines prefer
   * [[graft.streaming.StreamingOps]] watermarked aggregations /
   * [[graft.streaming.StreamJoins]].
+  *
+  * RUN FUSION: every stateful operator is a [[Step]] over one micro-batch,
+  * and each maximal linear run of them executes as ONE single-group
+  * `flatMapGroupsWithState`, so a micro-batch pays one stateful exchange
+  * and one state store per run, not per operator (the wearable program's
+  * FilterAcc → chopTime run: 3 stages → 2 per trigger). A link fuses when
+  * the downstream vertex is the upstream's unique successor and has it as
+  * its unique predecessor; stateless Map/Filter/Expand vertices between
+  * two stateful ones run in place on the batch, a zip-join can only head
+  * a run, and any fan-out or fan-in ends one. Each later stateful stage
+  * re-sorts its input by [[graft.core.Event.orderKey]], the sort it did
+  * as its own pass, and a stage with no input in a batch is skipped with
+  * its state untouched, so outputs are bit-identical to per-operator
+  * lowering. The checkpointed state is the run's per-stage state vector
+  * (StateVersion `graft-state-v5`, [[decodeRunState]]). A vertex inside a
+  * run still maps to its own output: reading it builds the run's prefix
+  * up to that vertex as a separate pass.
   */
 object StreamingLowering {
 
@@ -46,7 +63,6 @@ object StreamingLowering {
 
   def lower(spark: SparkSession, g: StreamGraph,
             sources: Map[Int, Dataset[Event[Any]]]): Map[Int, Dataset[Event[Any]]] = {
-    var out = Map.empty[Int, Dataset[Event[Any]]]
     // WINDOW-CHAIN FUSION: a recognized window form followed by a linear
     // chain of stateless Filter/Map vertices absorbs the chain INTO the
     // window state machine — each closed window runs the same closures in
@@ -60,96 +76,180 @@ object StreamingLowering {
     // lowering's window+aggregate frame fusion; emitted values are
     // bit-identical to the unfused pipeline by construction.
     val fusedChains: Map[Int, List[StreamVertex]] = g.vertices.collect {
-      case v if v.op == OpWindow && recognizedWindowLower(v).isDefined =>
+      case v if v.op == OpWindow && recognizedWindowStep(v).isDefined =>
         v.id -> fusionChain(g, v.id)
     }.filter(_._2.nonEmpty).toMap
     val absorbedToWindow: Map[Int, Int] =
       fusedChains.flatMap { case (w, chain) => chain.map(_.id -> w) }
+    // each vertex's output, built on first read: a vertex inside a
+    // stateful run materializes (as its own prefix of the run) only when
+    // a caller asks for it
+    var out = Map.empty[Int, () => Dataset[Event[Any]]]
+    // the stateful run each vertex sits in, up to and including it
+    var runs = Map.empty[Int, Run]
     for (v <- g.topoOrder) {
       if (absorbedToWindow.contains(v.id)) {
         // an absorbed vertex's output IS the fused window output (the
         // chain's closures already ran inside the state machine)
-        out += v.id -> out(absorbedToWindow(v.id))
+        val w = absorbedToWindow(v.id)
+        out += v.id -> out(w)
+        runs ++= runs.get(w).map(v.id -> _)
       } else {
-      val ins = g.predecessors(v.id).map(out)
-      def in0 = ins.head
-      val ds: Dataset[Event[Any]] = v.op match {
-        case OpSource(_) => sources(v.id)
-        case OpSink      => in0
-        case OpMap =>
-          val f = v.params.head.fn.asInstanceOf[Any => Any]
-          in0.map(e => Event(e.time, e.value.map(f)))
-        case OpFilter(_) =>
-          val p = v.params.head.fn.asInstanceOf[Any => Boolean]
-          in0.filter((e: Event[Any]) => e.value.forall(p))
-        case OpExpand =>
-          in0.flatMap { e =>
-            e.value match {
-              case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
-              case Some(other)      => Seq(Event(e.time, Some(other)))
-              case None             => Seq(Event[Any](e.time, None))
-            }
-          }
-        case OpMerge => ins.reduce(_ union _)
-        case OpFilterAcc(_) =>
-          val accfn = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          val pred = v.params(2).fn.asInstanceOf[(Any, Any) => Boolean]
-          statefulLower(in0) { (events, acc0) =>
-            var acc = if (acc0 == null) init else acc0
-            val kept = events.flatMap { e =>
-              e.value match {
-                case Some(x) =>
-                  val keep = pred(x, acc); acc = accfn(acc, x)
-                  if (keep) Some(e) else None
-                case None => Some(e)
-              }
-            }
-            (kept, acc)
-          }
-        case OpScan =>
-          val f = v.params(0).fn.asInstanceOf[(Any, Any) => Any]
-          val init = v.params(1).fn
-          statefulLower(in0) { (events, acc0) =>
-            var acc = if (acc0 == null) init else acc0
-            val outEvs = events.map { e =>
-              e.value match {
-                case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
-                case None    => Event[Any](e.time, None)
-              }
-            }
-            (outEvs, acc)
-          }
-        case OpWindow =>
-          recognizedWindowLower(v) match {
-            case Some(mk) => mk(in0, chainEmit(fusedChains.getOrElse(v.id, Nil)))
-            case None =>
-              v.params.head.fn match {
-                // BoundedLookback IS a Function1 — match the declaration
-                // first or it silently takes the O(prefix) generic path
-                case bl: graft.core.BoundedLookback[_] =>
-                  boundedWindowLower(in0,
-                    bl.maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]],
-                    bl.maxEvents)
-                case maker: Function1[_, _] =>
-                  genericWindowLower(in0,
-                    maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]])
-                case _ =>
-                  throw new UnsupportedOperationException(
-                    "Window with a non-function window-maker parameter has no " +
-                      "streaming lowering (recognized param forms: 'chop N', " +
-                      "'chopTime MS', 'sliding N', 'slidingTime MS', or an " +
-                      "executable WindowMaker closure for the bounded-buffer " +
-                      "fallback); use graft.streaming.StreamingOps watermarked " +
-                      "aggregations for column-typed pipelines")
-              }
-          }
-        case OpJoin => zipJoinLower(ins(0), ins(1))
-      }
-      out += v.id -> ds
+        val preds = g.predecessors(v.id)
+        def in(i: Int): Dataset[Event[Any]] = out(preds(i))()
+        // the run v extends: its unique predecessor's, over a link that is
+        // also that predecessor's unique successor (fan-out or fan-in
+        // breaks a run: another consumer needs the intermediate stream)
+        val upstream: Option[Run] = preds match {
+          case Vector(u) if g.successors(u) == Vector(v.id) => runs.get(u)
+          case _                                            => None
+        }
+        def plain(ds: => Dataset[Event[Any]]): Unit = {
+          lazy val built = ds
+          out += v.id -> (() => built)
+        }
+        // a stateless vertex: a Dataset operator on its own, and the same
+        // closure applied in place when it sits between two stateful ones
+        def stateless(ds: => Dataset[Event[Any]], inRun: Batch => Batch): Unit = {
+          plain(ds)
+          runs ++= upstream.map(r => v.id -> (r :+ Stateless(inRun)))
+        }
+        def stateful(run: Run): Unit = {
+          plain(statefulLower(run.input(), run.stages))
+          runs += v.id -> run
+        }
+        v.op match {
+          case OpSource(_) =>
+            val src = sources(v.id)
+            out += v.id -> (() => src)
+          case OpSink  => out += v.id -> out(preds.head)
+          case OpMerge => plain(preds.indices.map(in).reduce(_ union _))
+          case OpMap =>
+            val f = v.params.head.fn.asInstanceOf[Any => Any]
+            val m = (e: Event[Any]) => Event(e.time, e.value.map(f))
+            stateless(in(0).map(m), _.map(m))
+          case OpFilter(_) =>
+            val p = v.params.head.fn.asInstanceOf[Any => Boolean]
+            val keep = (e: Event[Any]) => e.value.forall(p)
+            stateless(in(0).filter(keep), _.filter(keep))
+          case OpExpand => stateless(in(0).flatMap(expandEvent), _.flatMap(expandEvent))
+          case OpJoin =>
+            // zip-join only ever heads a run: its input is the tagged union
+            stateful(Run(() => zipTagged(in(0), in(1)),
+              Vector(Stateful(zipJoinStep(MaxZipBufferedEvents)))))
+          case OpFilterAcc(_) | OpScan | OpWindow =>
+            val stage = Stateful(statefulStep(v, fusedChains.getOrElse(v.id, Nil)))
+            stateful(upstream.fold(Run(() => in(0), Vector(stage)))(_ :+ stage))
+        }
       }
     }
-    out
+    new LazyOutputs(out)
+  }
+
+  /** [[lower]]'s result: each vertex's Dataset, built on first read. */
+  private final class LazyOutputs(thunks: Map[Int, () => Dataset[Event[Any]]])
+      extends scala.collection.immutable.AbstractMap[Int, Dataset[Event[Any]]] {
+    def get(id: Int): Option[Dataset[Event[Any]]] = thunks.get(id).map(_())
+    def iterator: Iterator[(Int, Dataset[Event[Any]])] =
+      thunks.iterator.map { case (id, ds) => id -> ds() }
+    def removed(id: Int): Map[Int, Dataset[Event[Any]]] = new LazyOutputs(thunks - id)
+    def updated[V1 >: Dataset[Event[Any]]](id: Int, ds: V1): Map[Int, V1] =
+      Map.from(iterator).updated(id, ds)
+    override def contains(id: Int): Boolean = thunks.contains(id)
+    override def keysIterator: Iterator[Int] = thunks.keysIterator
+    override def knownSize: Int = thunks.size
+  }
+
+  private[plans] type Batch = IndexedSeq[Event[Any]]
+
+  /** One stateful operator's transition over one micro-batch: its input
+    * events, in stream order, and its state (null before its first
+    * batch), to its output events and next state. */
+  private[plans] type Step = (Batch, Any) => (Batch, Any)
+
+  /** A stage of a stateful run: a stateful operator's [[Step]], or a
+    * stateless Map/Filter/Expand applied to the batch in place. */
+  private sealed trait Stage extends Serializable
+  private final case class Stateful(step: Step) extends Stage
+  private final case class Stateless(f: Batch => Batch) extends Stage
+
+  /** A linear stateful run up to some vertex: the Dataset its head reads
+    * (built on demand) and its stages in graph order. */
+  private final case class Run(input: () => Dataset[Event[Any]], stages: Vector[Stage]) {
+    def :+(s: Stage): Run = copy(stages = stages :+ s)
+  }
+
+  private val expandEvent: Event[Any] => Seq[Event[Any]] = e =>
+    e.value match {
+      case Some(vs: Seq[_]) => vs.map(x => Event(e.time, Some(x: Any)))
+      case Some(other)      => Seq(Event(e.time, Some(other)))
+      case None             => Seq(Event[Any](e.time, None))
+    }
+
+  /** The [[Step]] of a single-input stateful vertex (FilterAcc, Scan,
+    * Window — a recognized window form with its fused emit chain, else
+    * the bounded or generic window fallback). */
+  private def statefulStep(v: StreamVertex, chain: List[StreamVertex]): Step = v.op match {
+    case OpFilterAcc(_) =>
+      filterAccStep(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn,
+        v.params(2).fn.asInstanceOf[(Any, Any) => Boolean])
+    case OpScan =>
+      scanStep(v.params(0).fn.asInstanceOf[(Any, Any) => Any], v.params(1).fn)
+    case _ =>
+      recognizedWindowStep(v) match {
+        case Some(mk) => mk(chainEmit(chain))
+        case None =>
+          v.params.head.fn match {
+            // BoundedLookback IS a Function1 — match the declaration
+            // first or it silently takes the O(prefix) generic path
+            case bl: graft.core.BoundedLookback[_] =>
+              boundedWindowStep(
+                bl.maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]],
+                bl.maxEvents)
+            case maker: Function1[_, _] =>
+              genericWindowStep(
+                maker.asInstanceOf[List[Event[Any]] => List[List[Event[Any]]]],
+                MaxGenericWindowBufferedEvents)
+            case _ =>
+              throw new UnsupportedOperationException(
+                "Window with a non-function window-maker parameter has no " +
+                  "streaming lowering (recognized param forms: 'chop N', " +
+                  "'chopTime MS', 'sliding N', 'slidingTime MS', or an " +
+                  "executable WindowMaker closure for the bounded-buffer " +
+                  "fallback); use graft.streaming.StreamingOps watermarked " +
+                  "aggregations for column-typed pipelines")
+          }
+      }
+  }
+
+  /** `filterAcc` (FunctionalProcessing.hs:181-186): an event is kept iff
+    * `pred(value, acc)` before `acc` absorbs it; valueless events (ticks)
+    * pass. State = the accumulator. */
+  private def filterAccStep(accfn: (Any, Any) => Any, init: Any,
+                            pred: (Any, Any) => Boolean): Step = { (events, acc0) =>
+    var acc = if (acc0 == null) init else acc0
+    val kept = events.flatMap { e =>
+      e.value match {
+        case Some(x) =>
+          val keep = pred(x, acc); acc = accfn(acc, x)
+          if (keep) Some(e) else None
+        case None => Some(e)
+      }
+    }
+    (kept, acc)
+  }
+
+  /** `streamScan` (FunctionalProcessing.hs:188-191): each data event emits
+    * the accumulator after absorbing it. State = the accumulator. */
+  private def scanStep(f: (Any, Any) => Any, init: Any): Step = { (events, acc0) =>
+    var acc = if (acc0 == null) init else acc0
+    val outEvs = events.map { e =>
+      e.value match {
+        case Some(x) => acc = f(acc, x); Event(e.time, Some(acc))
+        case None    => Event[Any](e.time, None)
+      }
+    }
+    (outEvs, acc)
   }
 
   /** How each recognized window window-maker form lowers, parameterized by
@@ -157,13 +257,12 @@ object StreamingLowering {
     * Range-checked extractors, not `forall(_.isDigit)`: an out-of-range
     * count like "chop 9999999999" must fall through to the generic/error
     * path, not throw a bare NumberFormatException. */
-  private def recognizedWindowLower(v: StreamVertex)
-      : Option[(Dataset[Event[Any]], WindowEmit) => Dataset[Event[Any]]] =
+  private def recognizedWindowStep(v: StreamVertex): Option[WindowEmit => Step] =
     v.params.head.src.trim.split("\\s+").toList match {
-      case "chop" :: AsPosInt(n) :: Nil          => Some((ds, em) => chopLower(ds, n, em))
-      case "chopTime" :: AsPosLong(ms) :: Nil    => Some((ds, em) => chopTimeLower(ds, ms, em))
-      case "sliding" :: AsPosInt(n) :: Nil       => Some((ds, em) => slidingLower(ds, n, em))
-      case "slidingTime" :: AsPosLong(ms) :: Nil => Some((ds, em) => slidingTimeLower(ds, ms, em))
+      case "chop" :: AsPosInt(n) :: Nil          => Some(chopStep(n, _))
+      case "chopTime" :: AsPosLong(ms) :: Nil    => Some(chopTimeStep(ms, _))
+      case "sliding" :: AsPosInt(n) :: Nil       => Some(slidingStep(n, _))
+      case "slidingTime" :: AsPosLong(ms) :: Nil => Some(slidingTimeStep(ms, _))
       case _                                     => None
     }
 
@@ -199,7 +298,7 @@ object StreamingLowering {
     * recognized fold can run allocation-free; `fromRange` goes one step
     * further and hands over a PRIMITIVE mirror of the window (parallel
     * `vals`/`isData` arrays built once per micro-batch by
-    * [[slidingTimeLower]]), so a recognized fold touches no Event
+    * [[slidingTimeStep]]), so a recognized fold touches no Event
     * object, no Option, no cast per element — the per-element cost drops
     * from a kryo'd-object walk to two or three flops. Defaults
     * materialize the list, so un-fused pipelines are untouched. */
@@ -418,14 +517,19 @@ object StreamingLowering {
     * wrong-shape payload gets a directed error naming the operator and the
     * fix. Package-visible for direct spec coverage (a wrong-shape payload
     * cannot be injected through a real checkpoint without one). */
-  private def badState(op: String, expected: String, got: Any, e: Throwable) =
+  private def badState(op: String, expected: String, got: Any, e: Throwable) = {
+    val shape = got match {
+      case s: Seq[_] => s"${got.getClass.getName} of ${s.length}"
+      case _         => got.getClass.getName
+    }
     new IllegalStateException(
       s"incompatible streaming checkpoint state for operator '$op': expected " +
-        s"$expected, got ${got.getClass.getName} (state encoding '$StateVersion'). " +
+        s"$expected, got $shape (state encoding '$StateVersion'). " +
         "The checkpoint was written by a build with a different state shape — " +
         "restart the query with a fresh checkpointLocation (streaming state is " +
         "not migrated across shape changes), and bump StateVersion in the build " +
         "that changed the shape.", e)
+  }
 
   private[plans] def decodeChopState(st: Any): (Int, List[Event[Any]]) =
     if (st == null) (0, Nil)
@@ -471,18 +575,16 @@ object StreamingLowering {
     * count so each event costs O(1) (a `buf :+ e` + `buf.length` formulation
     * is O(buffer) per event — O(n²) per window on this single-threaded hot
     * path). */
-  private def chopLower(ds: Dataset[Event[Any]], n: Int,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      var (count, rev) = decodeChopState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
-      events.filter(_.isData).foreach { e =>
-        rev = e :: rev
-        count += 1
-        if (count == n) { emit(rev.reverse).foreach(out += _); rev = Nil; count = 0 }
-      }
-      (out.result(), (count, rev))
+  private def chopStep(n: Int, emit: WindowEmit): Step = { (events, st) =>
+    var (count, rev) = decodeChopState(st)
+    val out = IndexedSeq.newBuilder[Event[Any]]
+    events.filter(_.isData).foreach { e =>
+      rev = e :: rev
+      count += 1
+      if (count == n) { emit(rev.reverse).foreach(out += _); rev = Nil; count = 0 }
     }
+    (out.result(), (count, rev))
+  }
 
   /** `chopTime ms` with the reference's first-event alignment
     * (FunctionalProcessing.hs:118-129): state = (current window start, open
@@ -502,60 +604,56 @@ object StreamingLowering {
     * gaps keep the faithful one-empty-per-period semantics. */
   private[plans] val MaxEmptyWindowsPerGap = 10000L
 
-  private def chopTimeLower(ds: Dataset[Event[Any]], ms: Long,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      // Long.MinValue = "no window open yet": a -1 sentinel would re-trigger
-      // initialization on every PRE-EPOCH (negative) timestamp, resetting
-      // the origin forever and never closing a window. Buffer kept reversed
-      // for O(1) append (see chopLower). All arithmetic in MICROSECONDS
-      // (state stores a µs origin — part of the StateVersion contract):
-      // getTime's ms granularity would misplace events within 1 ms of a
-      // window boundary on µs-granular streams.
-      val msUs = ms * 1000L
-      var (start, rev) = decodeChopTimeState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
-      events.filter(_.isTimed).foreach { e =>
-        val t = Event.micros(e.time.get)
-        if (start == Long.MinValue) start = t
-        if (t >= start + msUs && (t - start) / msUs > MaxEmptyWindowsPerGap) {
-          emit(rev.reverse).foreach(out += _)
-          rev = Nil
-          var emitted = 1L
-          while (emitted < MaxEmptyWindowsPerGap) { emit(Nil).foreach(out += _); emitted += 1 }
-          start += ((t - start) / msUs) * msUs
-        }
-        while (t >= start + msUs) {
-          emit(rev.reverse).foreach(out += _)
-          rev = Nil
-          start += msUs
-        }
-        rev = e :: rev
+  private def chopTimeStep(ms: Long, emit: WindowEmit): Step = { (events, st) =>
+    // Long.MinValue = "no window open yet": a -1 sentinel would re-trigger
+    // initialization on every PRE-EPOCH (negative) timestamp, resetting
+    // the origin forever and never closing a window. Buffer kept reversed
+    // for O(1) append (see chopStep). All arithmetic in MICROSECONDS
+    // (state stores a µs origin — part of the StateVersion contract):
+    // getTime's ms granularity would misplace events within 1 ms of a
+    // window boundary on µs-granular streams.
+    val msUs = ms * 1000L
+    var (start, rev) = decodeChopTimeState(st)
+    val out = IndexedSeq.newBuilder[Event[Any]]
+    events.filter(_.isTimed).foreach { e =>
+      val t = Event.micros(e.time.get)
+      if (start == Long.MinValue) start = t
+      if (t >= start + msUs && (t - start) / msUs > MaxEmptyWindowsPerGap) {
+        emit(rev.reverse).foreach(out += _)
+        rev = Nil
+        var emitted = 1L
+        while (emitted < MaxEmptyWindowsPerGap) { emit(Nil).foreach(out += _); emitted += 1 }
+        start += ((t - start) / msUs) * msUs
       }
-      (out.result(), (start, rev))
+      while (t >= start + msUs) {
+        emit(rev.reverse).foreach(out += _)
+        rev = Nil
+        start += msUs
+      }
+      rev = e :: rev
     }
+    (out.result(), (start, rev))
+  }
 
   /** `sliding n` (FunctionalProcessing.hs:93-97): per data event, the window
     * of the next n events; state = the last ≤ n−1 data events, in a FIFO
     * queue with an explicit count so enqueue/dequeue are O(1) per event
     * (the window materializes O(n) only when one closes — unavoidable). */
-  private def slidingLower(ds: Dataset[Event[Any]], n: Int,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      var (count, buf) = decodeSlidingState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
-      events.filter(_.isData).foreach { e =>
-        buf = buf.enqueue(e)
-        count += 1
-        if (count == n) {
-          emit(buf.toList).foreach(out += _)
-          val (_, rest) = buf.dequeue
-          buf = rest
-          count -= 1
-        }
+  private def slidingStep(n: Int, emit: WindowEmit): Step = { (events, st) =>
+    var (count, buf) = decodeSlidingState(st)
+    val out = IndexedSeq.newBuilder[Event[Any]]
+    events.filter(_.isData).foreach { e =>
+      buf = buf.enqueue(e)
+      count += 1
+      if (count == n) {
+        emit(buf.toList).foreach(out += _)
+        val (_, rest) = buf.dequeue
+        buf = rest
+        count -= 1
       }
-      (out.result(), (count, buf))
     }
+    (out.result(), (count, buf))
+  }
 
   /** `slidingTime ms` (FunctionalProcessing.hs:99-108): per timed event e,
     * the window [e.time, e.time+ms); e's window closes when the first event
@@ -575,87 +673,85 @@ object StreamingLowering {
     * element of every window). Payloads that are not Doubles fall back
     * to the original queue-iterator path (same order, same windows —
     * the arrays are an acceleration, never a semantic). */
-  private def slidingTimeLower(ds: Dataset[Event[Any]], ms: Long,
-      emit: WindowEmit): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      // µs arithmetic (see chopTimeLower)
-      val msUs = ms * 1000L
-      val buf = decodeSlidingTimeState(st)
-      val out = IndexedSeq.newBuilder[Event[Any]]
-      val timed = events.filter(_.isTimed)
-      val carried = buf.length
-      val n = carried + timed.length
-      val evs = new Array[Event[Any]](n)
-      locally { var i = 0; buf.foreach { e => evs(i) = e; i += 1 }
-        timed.foreach { e => evs(i) = e; i += 1 } }
-      val times = new Array[Long](n)
-      val isData = new Array[Boolean](n)
-      val vals = new Array[Double](n)
-      var primOk = true
-      locally { var i = 0
-        while (i < n) {
-          val e = evs(i)
-          times(i) = Event.micros(e.time.get)
-          isData(i) = e.isData
-          if (e.isData) e.value.get match {
-            case d: java.lang.Double => vals(i) = d
-            case _                   => primOk = false
-          }
-          i += 1
-        } }
-      if (primOk) {
-        var h = 0
-        var idx = carried
-        // window-end boundary carried across windows: when ends
-        // (= times(h)+ms) are non-decreasing in h — the sorted-batch
-        // common case — every index the scan has passed satisfied
-        // `times < end` against an end no larger than the current one,
-        // so the bound resumes where the previous window stopped and
-        // the scan is O(n) total instead of O(n·window). Late data
-        // across micro-batches makes the combined carried++batch array
-        // non-monotone (each batch is sorted, but a new batch can start
-        // earlier than carried state): there an end can REGRESS, and a
-        // resumed bound would overshoot — include events at/after the
-        // window end that the fallback path's first-stop takeWhile
-        // excludes. Detect the regression and restart the scan at h:
-        // first-stop semantics are restored exactly, still O(n) total
-        // for sorted input (regressions cost a local re-scan only).
-        var upTo = 0
-        var prevEnd = Long.MinValue
-        while (idx < n) {
-          val t = times(idx)
-          while (h < idx && times(h) + msUs <= t) {
-            val end = times(h) + msUs
-            if (end < prevEnd) upTo = h
-            prevEnd = end
-            if (upTo < h) upTo = h
-            while (upTo < idx && times(upTo) < end) upTo += 1
-            emit.fromRange(evs, isData, vals, h, upTo).foreach(out += _)
-            h += 1
-          }
-          idx += 1
+  private def slidingTimeStep(ms: Long, emit: WindowEmit): Step = { (events, st) =>
+    // µs arithmetic (see chopTimeStep)
+    val msUs = ms * 1000L
+    val buf = decodeSlidingTimeState(st)
+    val out = IndexedSeq.newBuilder[Event[Any]]
+    val timed = events.filter(_.isTimed)
+    val carried = buf.length
+    val n = carried + timed.length
+    val evs = new Array[Event[Any]](n)
+    locally { var i = 0; buf.foreach { e => evs(i) = e; i += 1 }
+      timed.foreach { e => evs(i) = e; i += 1 } }
+    val times = new Array[Long](n)
+    val isData = new Array[Boolean](n)
+    val vals = new Array[Double](n)
+    var primOk = true
+    locally { var i = 0
+      while (i < n) {
+        val e = evs(i)
+        times(i) = Event.micros(e.time.get)
+        isData(i) = e.isData
+        if (e.isData) e.value.get match {
+          case d: java.lang.Double => vals(i) = d
+          case _                   => primOk = false
         }
-        var rest = scala.collection.immutable.Queue.empty[Event[Any]]
-        while (h < n) { rest = rest.enqueue(evs(h)); h += 1 }
-        (out.result(), rest)
-      } else {
-        // non-Double payloads: the original queue path, windows and
-        // order bit-identical
-        var q = buf
-        timed.foreach { e =>
-          val t = Event.micros(e.time.get)
-          while (q.nonEmpty && Event.micros(q.head.time.get) + msUs <= t) {
-            val end = Event.micros(q.head.time.get) + msUs
-            emit.fromIterator(q.iterator.takeWhile(x => Event.micros(x.time.get) < end))
-              .foreach(out += _)
-            val (_, rest) = q.dequeue
-            q = rest
-          }
-          q = q.enqueue(e)
+        i += 1
+      } }
+    if (primOk) {
+      var h = 0
+      var idx = carried
+      // window-end boundary carried across windows: when ends
+      // (= times(h)+ms) are non-decreasing in h — the sorted-batch
+      // common case — every index the scan has passed satisfied
+      // `times < end` against an end no larger than the current one,
+      // so the bound resumes where the previous window stopped and
+      // the scan is O(n) total instead of O(n·window). Late data
+      // across micro-batches makes the combined carried++batch array
+      // non-monotone (each batch is sorted, but a new batch can start
+      // earlier than carried state): there an end can REGRESS, and a
+      // resumed bound would overshoot — include events at/after the
+      // window end that the fallback path's first-stop takeWhile
+      // excludes. Detect the regression and restart the scan at h:
+      // first-stop semantics are restored exactly, still O(n) total
+      // for sorted input (regressions cost a local re-scan only).
+      var upTo = 0
+      var prevEnd = Long.MinValue
+      while (idx < n) {
+        val t = times(idx)
+        while (h < idx && times(h) + msUs <= t) {
+          val end = times(h) + msUs
+          if (end < prevEnd) upTo = h
+          prevEnd = end
+          if (upTo < h) upTo = h
+          while (upTo < idx && times(upTo) < end) upTo += 1
+          emit.fromRange(evs, isData, vals, h, upTo).foreach(out += _)
+          h += 1
         }
-        (out.result(), q)
+        idx += 1
       }
+      var rest = scala.collection.immutable.Queue.empty[Event[Any]]
+      while (h < n) { rest = rest.enqueue(evs(h)); h += 1 }
+      (out.result(), rest)
+    } else {
+      // non-Double payloads: the original queue path, windows and
+      // order bit-identical
+      var q = buf
+      timed.foreach { e =>
+        val t = Event.micros(e.time.get)
+        while (q.nonEmpty && Event.micros(q.head.time.get) + msUs <= t) {
+          val end = Event.micros(q.head.time.get) + msUs
+          emit.fromIterator(q.iterator.takeWhile(x => Event.micros(x.time.get) < end))
+            .foreach(out += _)
+          val (_, rest) = q.dequeue
+          q = rest
+        }
+        q = q.enqueue(e)
+      }
+      (out.result(), q)
     }
+  }
 
   /** Cap on the generic window fallback's buffered stream prefix — the
     * honest cost of an arbitrary closure: it must see the prefix it
@@ -709,43 +805,46 @@ object StreamingLowering {
   private[plans] def genericWindowLower(ds: Dataset[Event[Any]],
       maker: List[Event[Any]] => List[List[Event[Any]]],
       maxBuffer: Int = MaxGenericWindowBufferedEvents): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      var (emitted, emittedHash, lastEmitted, rev) = decodeGenericWindowState(st)
-      events.foreach { e => rev = e :: rev }
-      val buffered = rev.length
-      if (buffered > maxBuffer) {
-        throw new IllegalStateException(
-          s"generic window-maker state exceeded maxBuffer=$maxBuffer: an arbitrary " +
-            "closure must buffer the whole stream prefix (it may window any of it), " +
-            "so state grows with stream length. Use a recognized maker form " +
-            "('chop N', 'chopTime MS', 'sliding N', 'slidingTime MS' — O(window) " +
-            "state) or a graft.streaming.StreamingOps watermarked aggregation.")
-      }
-      val windows = maker(rev.reverse)
-      val closed = if (windows.isEmpty) Nil else windows.init
-      val replayPrefix = closed.take(emitted).map(windowEvent)
-      val replayHash = scala.util.hashing.MurmurHash3.orderedHash(replayPrefix)
-      // the boundary (most recently emitted) window is checked by EXACT
-      // equality — it is where a non-monotone maker rewrites first;
-      // interior windows fall back to the 32-bit prefix hash (2^-32
-      // false-negative residual, documented above)
-      if (emitted > closed.length ||
-          (emitted > 0 && (replayHash != emittedHash ||
-            !lastEmitted.contains(replayPrefix.last)))) {
-        throw new IllegalStateException(
-          "generic window-maker is not prefix-monotone: re-applying the closure to " +
-            s"the grown prefix rewrote ${if (emitted > closed.length) "away" else "the content of"} " +
-            "already-emitted windows. An emitted streaming row cannot be retracted, " +
-            "so this maker has no faithful incremental lowering — run it on the " +
-            "batch surface (StreamOps.streamWindow) instead.")
-      }
-      val fresh = closed.drop(emitted).map(windowEvent).toIndexedSeq
-      emittedHash = scala.util.hashing.MurmurHash3
-        .orderedHash(closed.map(windowEvent))
-      emitted = closed.length
-      lastEmitted = fresh.lastOption.orElse(lastEmitted)
-      (fresh, (emitted, emittedHash, lastEmitted, rev))
+    statefulLower(ds, Vector(Stateful(genericWindowStep(maker, maxBuffer))))
+
+  private def genericWindowStep(maker: List[Event[Any]] => List[List[Event[Any]]],
+                                maxBuffer: Int): Step = { (events, st) =>
+    var (emitted, emittedHash, lastEmitted, rev) = decodeGenericWindowState(st)
+    events.foreach { e => rev = e :: rev }
+    val buffered = rev.length
+    if (buffered > maxBuffer) {
+      throw new IllegalStateException(
+        s"generic window-maker state exceeded maxBuffer=$maxBuffer: an arbitrary " +
+          "closure must buffer the whole stream prefix (it may window any of it), " +
+          "so state grows with stream length. Use a recognized maker form " +
+          "('chop N', 'chopTime MS', 'sliding N', 'slidingTime MS' — O(window) " +
+          "state) or a graft.streaming.StreamingOps watermarked aggregation.")
     }
+    val windows = maker(rev.reverse)
+    val closed = if (windows.isEmpty) Nil else windows.init
+    val replayPrefix = closed.take(emitted).map(windowEvent)
+    val replayHash = scala.util.hashing.MurmurHash3.orderedHash(replayPrefix)
+    // the boundary (most recently emitted) window is checked by EXACT
+    // equality — it is where a non-monotone maker rewrites first;
+    // interior windows fall back to the 32-bit prefix hash (2^-32
+    // false-negative residual, documented above)
+    if (emitted > closed.length ||
+        (emitted > 0 && (replayHash != emittedHash ||
+          !lastEmitted.contains(replayPrefix.last)))) {
+      throw new IllegalStateException(
+        "generic window-maker is not prefix-monotone: re-applying the closure to " +
+          s"the grown prefix rewrote ${if (emitted > closed.length) "away" else "the content of"} " +
+          "already-emitted windows. An emitted streaming row cannot be retracted, " +
+          "so this maker has no faithful incremental lowering — run it on the " +
+          "batch surface (StreamOps.streamWindow) instead.")
+    }
+    val fresh = closed.drop(emitted).map(windowEvent).toIndexedSeq
+    emittedHash = scala.util.hashing.MurmurHash3
+      .orderedHash(closed.map(windowEvent))
+    emitted = closed.length
+    lastEmitted = fresh.lastOption.orElse(lastEmitted)
+    (fresh, (emitted, emittedHash, lastEmitted, rev))
+  }
 
   private[plans] def decodeBoundedWindowState(st: Any): List[Event[Any]] =
     if (st == null) Nil
@@ -805,53 +904,56 @@ object StreamingLowering {
   private[plans] def boundedWindowLower(ds: Dataset[Event[Any]],
       maker: List[Event[Any]] => List[List[Event[Any]]],
       maxEvents: Int): Dataset[Event[Any]] =
-    statefulLower(ds) { (events, st) =>
-      var rev = decodeBoundedWindowState(st) // retained suffix, reversed
-      events.foreach { e => rev = e :: rev }
-      val windows = maker(rev.reverse)
-      def lieError(detail: String) = new IllegalStateException(
-        s"BoundedLookback(maxEvents=$maxEvents) declaration is false for this " +
-          s"window maker: $detail. The streaming lowering evicts events before " +
-          "the open window's span on the strength of that declaration, so a " +
-          "maker that looks further back has no faithful bounded-state " +
-          "lowering — raise maxEvents to the maker's true lookback, or drop " +
-          "the BoundedLookback wrapper to use the O(prefix) generic fallback " +
-          "(capped at MaxGenericWindowBufferedEvents), or run it on the batch " +
-          "surface (StreamOps.streamWindow).")
-      if (windows.isEmpty) {
-        // no window yet: the declaration bounds any future window's span to
-        // maxEvents events, so only the last maxEvents can ever be windowed
-        if (rev.length > maxEvents) {
-          val retainedRev = rev.take(maxEvents)
-          if (maker(retainedRev.reverse).nonEmpty)
-            throw lieError("the maker produces no window from the full " +
-              s"buffered prefix (${rev.length} events) but produces one from " +
-              s"its last $maxEvents events, so its output depends on evicted " +
-              "events in a way the declaration rules out")
-          rev = retainedRev
-        }
-        (IndexedSeq.empty[Event[Any]], rev)
-      } else {
-        val open = windows.last
-        val out = windows.init.map(windowEvent).toIndexedSeq
-        val expected = List(open)
-        val cap = math.min(maxEvents, rev.length)
-        def reproduces(k: Int): Boolean = maker(rev.take(k).reverse) == expected
-        val cand = open.length
-        var found = if (cand <= cap && reproduces(cand)) cand else -1
-        var k = 0
-        while (k <= cap && found < 0) {
-          if (k != cand && reproduces(k)) found = k
-          k += 1
-        }
-        if (found < 0)
-          throw lieError("no suffix of at most maxEvents events reproduces " +
-            "the currently-open window exactly while closing nothing new — " +
-            "the open window spans more input events than declared, or its " +
-            "contents depend on events before its own first event")
-        (out, rev.take(found))
+    statefulLower(ds, Vector(Stateful(boundedWindowStep(maker, maxEvents))))
+
+  private def boundedWindowStep(maker: List[Event[Any]] => List[List[Event[Any]]],
+                                maxEvents: Int): Step = { (events, st) =>
+    var rev = decodeBoundedWindowState(st) // retained suffix, reversed
+    events.foreach { e => rev = e :: rev }
+    val windows = maker(rev.reverse)
+    def lieError(detail: String) = new IllegalStateException(
+      s"BoundedLookback(maxEvents=$maxEvents) declaration is false for this " +
+        s"window maker: $detail. The streaming lowering evicts events before " +
+        "the open window's span on the strength of that declaration, so a " +
+        "maker that looks further back has no faithful bounded-state " +
+        "lowering — raise maxEvents to the maker's true lookback, or drop " +
+        "the BoundedLookback wrapper to use the O(prefix) generic fallback " +
+        "(capped at MaxGenericWindowBufferedEvents), or run it on the batch " +
+        "surface (StreamOps.streamWindow).")
+    if (windows.isEmpty) {
+      // no window yet: the declaration bounds any future window's span to
+      // maxEvents events, so only the last maxEvents can ever be windowed
+      if (rev.length > maxEvents) {
+        val retainedRev = rev.take(maxEvents)
+        if (maker(retainedRev.reverse).nonEmpty)
+          throw lieError("the maker produces no window from the full " +
+            s"buffered prefix (${rev.length} events) but produces one from " +
+            s"its last $maxEvents events, so its output depends on evicted " +
+            "events in a way the declaration rules out")
+        rev = retainedRev
       }
+      (IndexedSeq.empty[Event[Any]], rev)
+    } else {
+      val open = windows.last
+      val out = windows.init.map(windowEvent).toIndexedSeq
+      val expected = List(open)
+      val cap = math.min(maxEvents, rev.length)
+      def reproduces(k: Int): Boolean = maker(rev.take(k).reverse) == expected
+      val cand = open.length
+      var found = if (cand <= cap && reproduces(cand)) cand else -1
+      var k = 0
+      while (k <= cap && found < 0) {
+        if (k != cand && reproduces(k)) found = k
+        k += 1
+      }
+      if (found < 0)
+        throw lieError("no suffix of at most maxEvents events reproduces " +
+          "the currently-open window exactly while closing nothing new — " +
+          "the open window spans more input events than declared, or its " +
+          "contents depend on events before its own first event")
+      (out, rev.take(found))
     }
+  }
 
   /** Cap on the zip-join's unpaired tail. The reference's `zip` buffers the
     * faster side without bound while the slower side lags (lazy-list
@@ -868,51 +970,80 @@ object StreamingLowering {
     * not with stream length when rates match; a mismatch beyond `maxBuffer`
     * events raises a directed error instead of growing without bound. */
   private[plans] def zipJoinLower(left: Dataset[Event[Any]], right: Dataset[Event[Any]],
-                                  maxBuffer: Int = MaxZipBufferedEvents): Dataset[Event[Any]] = {
-    val tagged = left.map(e => Event(e.time, e.value.map(v => (0, v): Any)))
+                                  maxBuffer: Int = MaxZipBufferedEvents): Dataset[Event[Any]] =
+    statefulLower(zipTagged(left, right), Vector(Stateful(zipJoinStep(maxBuffer))))
+
+  /** The zip-join's input: both sides in one stream, each value tagged
+    * with its side (0 = left, 1 = right). */
+  private def zipTagged(left: Dataset[Event[Any]], right: Dataset[Event[Any]]): Dataset[Event[Any]] =
+    left.map(e => Event(e.time, e.value.map(v => (0, v): Any)))
       .union(right.map(e => Event(e.time, e.value.map(v => (1, v): Any))))
-    statefulLower(tagged) { (events, st) =>
-      var (lq, rq) = decodeZipJoinState(st)
-      // batch arrivals collected in builders, appended to the carried
-      // lists ONCE: the previous `lq = lq :+ e` per event was O(len) per
-      // append — O(batch²) per micro-batch, measured 27.7x wall at 10x
-      // rows in the r11 scale sweep (88 s; linear after this fix)
-      val newL = IndexedSeq.newBuilder[(Option[java.sql.Timestamp], Any)]
-      val newR = IndexedSeq.newBuilder[Any]
-      events.foreach { e =>
-        e.value match {
-          case Some((0, v)) => newL += (e.time -> v)
-          case Some((1, v)) => newR += v
-          case _            => () // ticks don't join
-        }
+
+  private def zipJoinStep(maxBuffer: Int): Step = { (events, st) =>
+    var (lq, rq) = decodeZipJoinState(st)
+    // batch arrivals collected in builders, appended to the carried
+    // lists ONCE: the previous `lq = lq :+ e` per event was O(len) per
+    // append — O(batch²) per micro-batch, measured 27.7x wall at 10x
+    // rows in the r11 scale sweep (88 s; linear after this fix)
+    val newL = IndexedSeq.newBuilder[(Option[java.sql.Timestamp], Any)]
+    val newR = IndexedSeq.newBuilder[Any]
+    events.foreach { e =>
+      e.value match {
+        case Some((0, v)) => newL += (e.time -> v)
+        case Some((1, v)) => newR += v
+        case _            => () // ticks don't join
       }
-      lq = lq ++ newL.result()
-      rq = rq ++ newR.result()
-      val k = math.min(lq.length, rq.length)
-      // Guard BEFORE pairing: the leftover after this batch's pairing is
-      // max(len) - k, a cheap length check — no point computing `out` (or
-      // mutating lq/rq) when the throw would discard it anyway.
-      val buffered = math.max(lq.length, rq.length) - k
-      if (buffered > maxBuffer) {
-        val (fast, slow) = if (lq.length > rq.length) ("left", "right") else ("right", "left")
-        throw new IllegalStateException(
-          s"zip-join state exceeded maxBuffer=$maxBuffer: $buffered unpaired events " +
-            s"buffered from the $fast side because the $slow side has fallen behind. " +
-            "zip pairs k-th with k-th, so a permanently slower/finished side grows " +
-            "state without bound (the reference's lazy zip blocks the same way). " +
-            "Fix the lagging source, or pair by key/time instead " +
-            "(graft.streaming.StreamJoins) if the sides are not rate-matched.")
-      }
-      val out = lq.take(k).zip(rq.take(k)).map { case ((lt, lv), rv) =>
-        Event(lt, Some((lv, rv): Any))
-      }.toIndexedSeq
-      lq = lq.drop(k); rq = rq.drop(k)
-      (out, (lq, rq))
     }
+    lq = lq ++ newL.result()
+    rq = rq ++ newR.result()
+    val k = math.min(lq.length, rq.length)
+    // Guard BEFORE pairing: the leftover after this batch's pairing is
+    // max(len) - k, a cheap length check — no point computing `out` (or
+    // mutating lq/rq) when the throw would discard it anyway.
+    val buffered = math.max(lq.length, rq.length) - k
+    if (buffered > maxBuffer) {
+      val (fast, slow) = if (lq.length > rq.length) ("left", "right") else ("right", "left")
+      throw new IllegalStateException(
+        s"zip-join state exceeded maxBuffer=$maxBuffer: $buffered unpaired events " +
+          s"buffered from the $fast side because the $slow side has fallen behind. " +
+          "zip pairs k-th with k-th, so a permanently slower/finished side grows " +
+          "state without bound (the reference's lazy zip blocks the same way). " +
+          "Fix the lagging source, or pair by key/time instead " +
+          "(graft.streaming.StreamJoins) if the sides are not rate-matched.")
+    }
+    val out = lq.take(k).zip(rq.take(k)).map { case ((lt, lv), rv) =>
+      Event(lt, Some((lv, rv): Any))
+    }.toIndexedSeq
+    lq = lq.drop(k); rq = rq.drop(k)
+    (out, (lq, rq))
   }
 
-  /** Single-group stateful pass: micro-batch events sorted by event time,
-    * folded through `step`, state carried across batches.
+  /** Checkpoint state-shape version. Every stateful run's state is
+    * stored wrapped as `(StateVersion, payload)`; a checkpoint written by a
+    * build with a DIFFERENT state encoding (the shapes changed in round 3:
+    * List → (Int, List)/Queue) fails the unwrap match and gets a DIRECTED
+    * error naming the fix, instead of a bare ClassCastException deep in an
+    * operator. Bump the version string whenever any operator's state shape
+    * changes. (v3: chopTime's stored window origin switched from ms to µs —
+    * same Long shape, incompatible meaning. v4: generic-window state grew
+    * the last-emitted window for the exact boundary monotonicity check.
+    * v5: the payload is the run's per-stage state vector, one entry per
+    * stateful operator in graph order, where v4 stored one operator's
+    * state bare.) */
+  private[plans] val StateVersion = "graft-state-v5"
+
+  /** A stateful run's checkpointed payload: one state per stateful stage,
+    * null for a stage that has not run yet. */
+  private[plans] def decodeRunState(st: Any, arity: Int): Vector[Any] = st match {
+    case null                               => Vector.fill(arity)(null)
+    case v: Vector[_] if v.length == arity => v
+    case other => throw badState("stateful-run",
+      s"a Vector of $arity per-stage states", other, null)
+  }
+
+  /** One stateful run as one single-group stateful pass: micro-batch events
+    * sorted by event time, folded through every stage in graph order,
+    * per-stage state carried across batches.
     *
     * TIMED events with equal timestamps are tiebroken by a content hash of
     * the payload, so the fold order — and hence e.g. which k-th left event
@@ -922,26 +1053,21 @@ object StreamingLowering {
     * for untimed streams. Equal-time events split ACROSS micro-batch
     * boundaries still fold in batch order: that is inherent to incremental
     * consumption (a source sequence number would not fix it either without
-    * a reorder buffer). */
-  /** Checkpoint state-shape version. Every stateful operator's state is
-    * stored wrapped as `(StateVersion, payload)`; a checkpoint written by a
-    * build with a DIFFERENT state encoding (the shapes changed in round 3:
-    * List → (Int, List)/Queue) fails the unwrap match and gets a DIRECTED
-    * error naming the fix, instead of a bare ClassCastException deep in an
-    * operator. Bump the version string whenever any operator's state shape
-    * changes. (v3: chopTime's stored window origin switched from ms to µs —
-    * same Long shape, incompatible meaning. v4: generic-window state grew
-    * the last-emitted window for the exact boundary monotonicity check.) */
-  private[plans] val StateVersion = "graft-state-v4"
-
-  private def statefulLower(ds: Dataset[Event[Any]])(
-      step: (IndexedSeq[Event[Any]], Any) => (IndexedSeq[Event[Any]], Any)): Dataset[Event[Any]] =
+    * a reorder buffer).
+    *
+    * Each later stateful stage re-sorts its input by the same key — the
+    * sort it did when it was its own `flatMapGroupsWithState` — so a Map
+    * between stages that changes the payload of equal-time events reorders
+    * them exactly as before. A stage whose input is empty this batch is
+    * skipped with its state untouched, as its own pass was never invoked
+    * for a group without rows. */
+  private def statefulLower(ds: Dataset[Event[Any]], stages: Vector[Stage]): Dataset[Event[Any]] = {
+    val arity = stages.count(_.isInstanceOf[Stateful])
     ds.map(e => (0, e))
       .groupByKey(_._1)(Encoders.scalaInt)
       .flatMapGroupsWithState[Any, Event[Any]](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Int, it: Iterator[(Int, Event[Any])], state: GroupState[Any]) =>
-          val sorted = it.map(_._2).toIndexedSeq.sortBy(Event.orderKey)
-          val acc0 = state.getOption.orNull match {
+          val payload = state.getOption.orNull match {
             case null                       => null
             case (StateVersion, payload)    => payload
             case other => throw new IllegalStateException(
@@ -951,8 +1077,21 @@ object StreamingLowering {
                 "a fresh checkpointLocation (streaming state is not migrated across " +
                 "encoding changes).")
           }
-          val (outEvs, acc) = step(sorted, acc0)
-          state.update((StateVersion, acc))
-          outEvs.iterator
+          val states = decodeRunState(payload, arity).toArray
+          var evs: Batch = it.map(_._2).toIndexedSeq.sortBy(Event.orderKey)
+          var k = 0
+          stages.foreach {
+            case Stateless(f) => evs = f(evs)
+            case Stateful(step) =>
+              if (k > 0) evs = evs.sortBy(Event.orderKey)
+              if (evs.nonEmpty) {
+                val (o, s) = step(evs, states(k))
+                evs = o; states(k) = s
+              }
+              k += 1
+          }
+          state.update((StateVersion, states.toVector))
+          evs.iterator
       }
+  }
 }

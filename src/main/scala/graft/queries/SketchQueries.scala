@@ -43,9 +43,11 @@ object SketchQueries {
       val sketch = ev.groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
           count(lit(1)).as("n"))
-      val exact = ev.groupBy(col("event_type"))
+      val exact = ev.groupBy(col("event_type").as("exact_type"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
-      sketch.join(exact, "event_type")
+      // null-safe: a NULL event_type is a group of its own, and an inner
+      // `=` join would drop it
+      sketch.join(exact, col("event_type") <=> col("exact_type"))
         .select(col("event_type"), col("exact_users"), col("n"),
           (abs(col("approx_users") - col("exact_users")).cast("double") /
             col("exact_users") <= 0.05).as("approx_ok"))

@@ -96,4 +96,17 @@ class ScalableWindowsSpec extends SparkSuite {
     graft.core.CacheRegistry.unpersistAll()
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("GRAFT_MAX_BROADCAST_CARRY_ROWS parses a row count, else fails with a directed error") {
+    assert(ScalableWindows.parseMaxBroadcastCarryRows(None) == 2000000L)
+    assert(ScalableWindows.parseMaxBroadcastCarryRows(Some(" 5000 ")) == 5000L)
+    assert(ScalableWindows.parseMaxBroadcastCarryRows(Some("0")) == 0L)
+    for (bad <- Seq("2M", "-1", "", "1e6", "99999999999999999999")) {
+      val e = intercept[IllegalArgumentException] {
+        ScalableWindows.parseMaxBroadcastCarryRows(Some(bad))
+      }
+      assert(e.getMessage.contains(s"GRAFT_MAX_BROADCAST_CARRY_ROWS='$bad'"), e.getMessage)
+      assert(e.getMessage.contains("non-negative integer"), e.getMessage)
+    }
+  }
 }

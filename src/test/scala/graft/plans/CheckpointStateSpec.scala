@@ -77,6 +77,37 @@ class CheckpointStateSpec extends AnyFunSuite {
     assert(e6.getMessage.contains("'generic-window'"))
   }
 
+  test("a stateful run's per-stage state vector decodes, null and well-shaped") {
+    assert(StreamingLowering.decodeRunState(null, 2) == Vector(null, null))
+    val v = Vector((3, goodEvents), null, 7L)
+    assert(StreamingLowering.decodeRunState(v, 3) == v)
+    // the per-stage payload still goes through its operator's decoder
+    assert(StreamingLowering.decodeChopState(
+      StreamingLowering.decodeRunState(v, 3).head) == ((3, goodEvents)))
+  }
+
+  test("a v4-shaped or wrong-arity run state yields the directed error naming v5") {
+    // v4 stored one operator's state bare, e.g. chop's (count, window)
+    val e1 = intercept[IllegalStateException] {
+      StreamingLowering.decodeRunState((3, goodEvents): Any, 1)
+    }
+    assert(e1.getMessage.contains("incompatible streaming checkpoint state"))
+    assert(e1.getMessage.contains("'stateful-run'"))
+    assert(e1.getMessage.contains("graft-state-v5"))
+    assert(e1.getMessage.contains("fresh checkpointLocation"))
+    // a run whose stage count changed since the checkpoint was written
+    val e2 = intercept[IllegalStateException] {
+      StreamingLowering.decodeRunState(Vector((3, goodEvents)): Any, 2)
+    }
+    assert(e2.getMessage.contains("a Vector of 2 per-stage states"))
+    assert(e2.getMessage.contains("of 1"))
+    // a per-stage sequence of the wrong collection type
+    val e3 = intercept[IllegalStateException] {
+      StreamingLowering.decodeRunState(List(null, null): Any, 2)
+    }
+    assert(e3.getMessage.contains("'stateful-run'"))
+  }
+
   test("the error names the current state encoding version") {
     val e = intercept[IllegalStateException] {
       StreamingLowering.decodeChopState("not a tuple": Any)

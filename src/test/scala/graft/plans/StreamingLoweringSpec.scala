@@ -6,6 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.exchange.{REQUIRED_BY_STATEFUL_OPERATOR, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 
 import graft.SparkSuite
 import graft.core.Event
@@ -728,5 +731,235 @@ class StreamingLoweringSpec extends SparkSuite {
     val (e3, d3, v3) = range(-1.0)
     val err = intercept[IllegalStateException] { em.fromRange(e3, d3, v3, 0, 1) }
     assert(err.getMessage.contains("fused 'max' fold disagrees"))
+  }
+
+  // ---- stateful-run fusion ----
+
+  /** (µs time, value) rows as the events a live source emits. */
+  private def liveEvents(rows: Seq[(Long, Long)]): List[Event[Any]] =
+    rows.map { case (us, v) => Event[Any](Some(Event.fromMicros(us)), Some(v: Any)) }.toList
+
+  /** Feeds `batches` to `g`'s source (id 0) through a MemoryStream, one
+    * micro-batch each, and returns what reaches `sinkId`, in emission
+    * order. With `restartAt = Some(k)` the query stops after k batches and
+    * a freshly lowered query resumes from the same checkpoint (the
+    * scanByKey restart pattern of StreamingOpsSpec). */
+  private def runLive(g: StreamGraph, sinkId: Int, batches: Seq[Seq[(Long, Long)]],
+                      restartAt: Option[Int]): List[Event[Any]] = {
+    val mem = MemoryStream[(Long, Long)](spark, 1)(
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+    val src: Dataset[Event[Any]] = mem.toDS().map { case (us, v) =>
+      Event[Any](Some(Event.fromMicros(us)), Some(v: Any))
+    }(Encoders.kryo[Event[Any]])
+    val ckpt = Files.createTempDirectory("graft-run-ckpt").toString
+    // keyed by batch id: a replayed batch overwrites, never duplicates
+    val got = new java.util.concurrent.ConcurrentSkipListMap[Long, Seq[Event[Any]]]()
+    val sink: (Dataset[Event[Any]], Long) => Unit = (ds, id) => { got.put(id, ds.collect().toSeq); () }
+    def start() = StreamingLowering.lower(spark, g, Map(0 -> src))(sinkId)
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch(sink).start()
+    var q = start()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      if (restartAt.contains(i)) { q.stop(); q = start() }
+      mem.addData(b)
+      q.processAllAvailable()
+    } finally q.stop()
+    got.values.asScala.flatten.toList
+  }
+
+  /** Cuts `rows` into `n` non-empty micro-batches at random positions where
+    * the timestamp changes (equal-time events split across batches fold in
+    * batch order, the documented incremental-consumption caveat). */
+  private def randomBatches(rows: Seq[(Long, Long)], n: Int,
+                            rnd: scala.util.Random): Seq[Seq[(Long, Long)]] = {
+    val cuttable = rows.indices.filter(i => i > 0 && rows(i)._1 != rows(i - 1)._1)
+    val cuts = rnd.shuffle(cuttable).take(n - 1).sorted
+    (0 +: cuts :+ rows.length).sliding(2).map { case Seq(a, b) => rows.slice(a, b) }.toSeq
+  }
+
+  private def longParam(name: String, f: Long => Any) =
+    Param(name, (v: Any) => f(v.asInstanceOf[Long]))
+  private def foldParam(name: String, f: (Long, Long) => Long) =
+    Param(name, (acc: Any, v: Any) => f(acc.asInstanceOf[Long], v.asInstanceOf[Long]): Any)
+  private def vtx(id: Int, op: StreamOperator, params: Param*) =
+    StreamVertex(id, op, params.toList, "Long", "Long", 1)
+  private def windowLength(v: Any): Int = v.asInstanceOf[List[Any]].length
+
+  /** FilterAcc (falling edge) → chopTime → Map length: the wearable shape. */
+  private val fallingEdgeChopTime = StreamGraph.path(Seq(
+    vtx(0, OpSource(1)),
+    vtx(1, OpFilterAcc(0.3), foldParam("(_, v) => v", (_, v) => v), Param("0", 0L),
+      Param("falling", (v: Any, prev: Any) =>
+        prev.asInstanceOf[Long] > 50 && v.asInstanceOf[Long] <= 50)),
+    vtx(2, OpWindow, Param("chopTime 40",
+      (s: List[Event[Any]]) => graft.core.WindowMakers.chopTime[Any](40)(s))),
+    vtx(3, OpMap, Param("length", (v: Any) => v.asInstanceOf[List[Any]].length: Any)),
+    vtx(4, OpSink)))
+
+  /** Scan → Map → sliding 3. */
+  private val scanMapSliding = StreamGraph.path(Seq(
+    vtx(0, OpSource(1)),
+    vtx(1, OpScan, foldParam("sum", _ + _), Param("0", 0L)),
+    vtx(2, OpMap, longParam("mod7", _ % 7)),
+    vtx(3, OpWindow, Param("sliding 3",
+      (s: List[Event[Any]]) => graft.core.WindowMakers.sliding[Any](3)(s))),
+    vtx(4, OpSink)))
+
+  /** FilterAcc (changes) → Filter → Scan → chop 2. */
+  private val changesFilterScanChop = StreamGraph.path(Seq(
+    vtx(0, OpSource(1)),
+    vtx(1, OpFilterAcc(0.9), foldParam("(_, v) => v", (_, v) => v), Param("-1", -1L),
+      Param("changed", (v: Any, acc: Any) => v != acc)),
+    vtx(2, OpFilter(0.7), longParam("notMod3", _ % 3 != 0)),
+    vtx(3, OpScan, foldParam("sum", _ + _), Param("0", 0L)),
+    vtx(4, OpWindow, Param("chop 2",
+      (s: List[Event[Any]]) => graft.core.WindowMakers.chop[Any](2)(s))),
+    vtx(5, OpSink)))
+
+  /** Scan → Map(scramble) → order-sensitive Scan: the Map rewrites the
+    * payloads of equal-time events, so their content-hash order changes
+    * and the second Scan's input must be re-sorted. */
+  private val scramble = longParam("scramble", v => (v * 7919) % 1009)
+  private val orderSensitive = foldParam("polyHash", (acc, v) => (acc * 31 + v) % 1000003)
+  private val scanScrambleScan = StreamGraph.path(Seq(
+    vtx(0, OpSource(1)),
+    vtx(1, OpScan, foldParam("sum", _ + _), Param("0", 0L)),
+    vtx(2, OpMap, scramble),
+    vtx(3, OpScan, orderSensitive, Param("1", 1L)),
+    vtx(4, OpSink)))
+
+  private def outputs(g: StreamGraph, in: List[Event[Any]]): List[Event[Any]] =
+    Interpreter.runToSinks(g, Map(0 -> in)).values.head
+
+  test("a fused stateful run equals the interpreter over random splits and every restart point") {
+    def distinctTimes(rnd: scala.util.Random, n: Int): Seq[(Long, Long)] =
+      (1 to n).scanLeft(1700000000000000L)((t, _) => t + 1000L + rnd.nextInt(20000))
+        .tail.map(t => (t, rnd.nextInt(101).toLong))
+    // the expected closed outputs of each run from its input, in order
+    val cases: Seq[(String, StreamGraph, Int, Boolean, List[Event[Any]] => List[Event[Any]])] = Seq(
+      ("FilterAcc -> chopTime", fallingEdgeChopTime, 4, false,
+        in => outputs(fallingEdgeChopTime, in).dropRight(1)),
+      ("Scan -> Map -> sliding 3", scanMapSliding, 4, false,
+        in => outputs(scanMapSliding, in).filter(e => windowLength(e.value.get) == 3)),
+      ("FilterAcc -> Filter -> Scan -> chop 2", changesFilterScanChop, 5, false,
+        in => outputs(changesFilterScanChop, in).filter(e => windowLength(e.value.get) == 2)),
+      ("Scan -> Map(scramble) -> Scan", scanScrambleScan, 4, true, { in =>
+        // each stateful stage folds its batch in Event.orderKey order: the
+        // second Scan sees the Map's output re-sorted
+        val mid = outputs(StreamGraph.path(Seq(vtx(0, OpSource(1)),
+          vtx(1, OpScan, foldParam("sum", _ + _), Param("0", 0L)),
+          vtx(2, OpMap, scramble), vtx(3, OpSink))), in)
+        val resorted = mid.sortBy(Event.orderKey)
+        assert(resorted != mid, "the Map must reorder equal-time events")
+        val expected = outputs(StreamGraph.path(Seq(vtx(0, OpSource(1)),
+          vtx(1, OpScan, orderSensitive, Param("1", 1L)), vtx(2, OpSink))), resorted)
+        assert(expected != outputs(scanScrambleScan, in),
+          "the re-sort must be observable in the second Scan's output")
+        expected
+      }))
+    for ((label, g, sinkId, equalTimes, expectedOf) <- cases; seed <- 1 to 2) {
+      val rnd = new scala.util.Random(seed * 31 + sinkId)
+      val rows =
+        if (!equalTimes) distinctTimes(rnd, 40 + rnd.nextInt(30))
+        else distinctTimes(rnd, 20).flatMap { case (t, _) =>
+          Seq.fill(1 + rnd.nextInt(3))((t, rnd.nextInt(101).toLong))
+        }
+      val input = liveEvents(rows).sortBy(Event.orderKey)
+      val expected = expectedOf(input)
+      assert(expected.nonEmpty, s"$label seed=$seed: vacuous case")
+      val batches = randomBatches(rows, 3, rnd)
+      for (restartAt <- None +: (1 until batches.length).map(Some(_))) {
+        val got = runLive(g, sinkId, batches, restartAt)
+        assert(got == expected,
+          s"$label seed=$seed batches=${batches.map(_.size).mkString("/")} " +
+            s"restartAt=$restartAt:\n got      $got\n expected $expected")
+      }
+    }
+  }
+
+  /** Executed plan of the first micro-batch of `lowered(sinkId)`: its
+    * (FlatMapGroupsWithState, stateful Exchange) counts. */
+  private def statefulShape(ds: Dataset[Event[Any]], feed: () => Unit): (Int, Int) = {
+    val sink: (Dataset[Event[Any]], Long) => Unit = (b, _) => { b.count(); () }
+    val q = ds.writeStream.outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("graft-run-shape").toString)
+      .foreachBatch(sink).start()
+    try {
+      feed()
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      (plan.collect { case p: FlatMapGroupsWithStateExec => p }.size,
+        plan.collect {
+          case e: ShuffleExchangeExec if e.shuffleOrigin == REQUIRED_BY_STATEFUL_OPERATOR => e
+        }.size)
+    } finally q.stop()
+  }
+
+  test("the wearable graph plans one state store; a fan-out between stateful vertices keeps two") {
+    import graft.examples.Wearable.{Sample, Threshold}
+    val wearable = StreamGraph.path(Seq(
+      StreamVertex(0, OpSource(1), Nil, "Sample", "Sample", 1),
+      StreamVertex(1, OpFilter(0.5),
+        List(Param("vibeOff", (v: Any) => v.asInstanceOf[Sample].vibe == 0)), "Sample", "Sample", 1),
+      StreamVertex(2, OpMap, List(Param("squares", (v: Any) => {
+        val s = v.asInstanceOf[Sample]
+        s.x.toLong * s.x + s.y.toLong * s.y + s.z.toLong * s.z
+      })), "Sample", "Long", 1),
+      StreamVertex(3, OpMap,
+        List(Param("intSqrt", (v: Any) => math.sqrt(v.asInstanceOf[Long].toDouble).toInt)),
+        "Long", "Int", 1),
+      StreamVertex(4, OpFilterAcc(0.1), List(
+        Param("(_, v) => v", (_: Any, v: Any) => v),
+        Param("0", 0),
+        Param("falling", (v: Any, prev: Any) =>
+          prev.asInstanceOf[Int] > Threshold && v.asInstanceOf[Int] <= Threshold)),
+        "Int", "Int", 1),
+      StreamVertex(5, OpWindow, List(Param("chopTime 120",
+        (s: List[Event[Any]]) => graft.core.WindowMakers.chopTime[Any](120)(s))), "Int", "[Int]", 1),
+      StreamVertex(6, OpMap, List(Param("length", (v: Any) => v.asInstanceOf[Seq[Any]].length)),
+        "[Int]", "Int", 1),
+      StreamVertex(7, OpSink, Nil, "Int", "IO", 1)))
+    val samples = MemoryStream[(Long, Int, Int, Int, Int)](spark, 1)(
+      Encoders.product[(Long, Int, Int, Int, Int)])
+    val src: Dataset[Event[Any]] = samples.toDS().map { case (us, x, y, z, vibe) =>
+      Event[Any](Some(Event.fromMicros(us)), Some(Sample(x, y, z, vibe)))
+    }(Encoders.kryo[Event[Any]])
+    val feedSamples = () => {
+      samples.addData((0 until 50).map(i =>
+        (1700000000000000L + 10000L * i, i % 40, 3, 4, i % 2))); ()
+    }
+    assert(statefulShape(StreamingLowering.lower(spark, wearable, Map(0 -> src))(7), feedSamples) ==
+      ((1, 1)))
+
+    // Scan feeds both a Sink and a chop window: the link Scan -> chop is
+    // not Scan's unique successor, so chop reads Scan's own pass
+    val fanOut = StreamGraph(
+      Vector(vtx(0, OpSource(1)),
+        vtx(1, OpScan, foldParam("sum", _ + _), Param("0", 0L)),
+        vtx(2, OpWindow, Param("chop 2",
+          (s: List[Event[Any]]) => graft.core.WindowMakers.chop[Any](2)(s))),
+        vtx(3, OpSink), vtx(4, OpSink)),
+      Vector((0, 1), (1, 2), (2, 3), (1, 4)))
+    val mem = MemoryStream[(Long, Long)](spark, 1)(
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+    val longs: Dataset[Event[Any]] = mem.toDS().map { case (us, v) =>
+      Event[Any](Some(Event.fromMicros(us)), Some(v: Any))
+    }(Encoders.kryo[Event[Any]])
+    val feedLongs = () => { mem.addData((0 until 10).map(i => (1000L * i, i.toLong))); () }
+    assert(statefulShape(StreamingLowering.lower(spark, fanOut, Map(0 -> longs))(3), feedLongs) ==
+      ((2, 2)))
+  }
+
+  test("a vertex inside a fused run still reads its own output") {
+    // batch Datasets: the FilterAcc vertex (1) and the window it feeds
+    // (2) are one run; reading vertex 1 builds the run's one-stage prefix
+    val rows = (0 until 60).map(i => (1700000000000000L + 7000L * i, ((i * 37) % 101).toLong))
+    val input = liveEvents(rows)
+    val lowered = StreamingLowering.lower(spark, fallingEdgeChopTime,
+      Map(0 -> spark.createDataset(input)(Encoders.kryo[Event[Any]])))
+    val all = Interpreter.run(fallingEdgeChopTime, Map(0 -> input))
+    assert(lowered(1).collect().toList == all(1))
+    assert(all(1).nonEmpty)
+    assert(lowered(4).collect().toList == all(4).dropRight(1))
   }
 }

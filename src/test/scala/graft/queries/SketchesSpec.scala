@@ -31,6 +31,21 @@ class SketchesSpec extends SparkSuite {
     gated.foreach(r => assert(r.getBoolean(3), s"approx_ok false for ${r.getString(0)}"))
   }
 
+  test("q_approx_distinct keeps a NULL event_type group") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-type").toString
+    val ev = Tables.events(spark, sfDir)
+    val nulls = ev.orderBy("event_id").limit(40)
+      .withColumn("event_type", lit(null).cast("string"))
+    ev.unionByName(nulls).write.parquet(s"$dir/events.parquet")
+    val got = SketchQueries.queries("q_approx_distinct")(spark, dir).collect()
+    assert(got.length == ev.select("event_type").distinct().count() + 1)
+    val nullRow = got.filter(_.isNullAt(0))
+    assert(nullRow.length == 1, got.mkString("\n"))
+    val users = nulls.select("user_id").distinct().count()
+    assert(nullRow.head.getLong(1) == users && nullRow.head.getLong(2) == 40L)
+    assert(nullRow.head.getBoolean(3))
+  }
+
   test("GK quantiles within the rank-error guarantee of exact quantiles; query bounds hold") {
     val got = Tables.events(spark, sfDir)
       .groupBy(col("event_type"))
